@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from .similarity import dot
 
@@ -98,7 +99,18 @@ def connected_components(
     and silently returning half-propagated labels would merge/split dup
     clusters incorrectly. This is the cluster step after near-dup pair
     generation (MinHash/SimHash pairs -> dup groups).
+
+    Node ids must be integral: the convergence check sums labels, and a
+    non-numeric id would sum to NULL and stop the loop after one round
+    with wrong labels, so other types raise ``TypeError`` up front.
     """
+    for c in (src, dst):
+        dt = edges.schema[c].dataType
+        if not isinstance(dt, IntegralType):
+            raise TypeError(
+                f"connected_components needs integral node ids; "
+                f"{c!r} is {dt.simpleString()}"
+            )
     # r17 (guide §5 — cache only what is reused AND expensive): the edge
     # frame joins into EVERY round; without a persist each iteration
     # re-executed the caller's whole upstream pipeline (the dup lanes

@@ -9,9 +9,10 @@ with a reload never sees a torn table. ``SORTKEY (city, fetched_at_utc)``
 (init.sql:17) maps to sortWithinPartitions before write so parquet
 row-group min/max stats give the same scan-skipping effect.
 
-``write_gold``/``load_gold`` are the default pipeline path; the pre-txn
-plain-directory layout is still readable (legacy fallback in
-``load_gold``), but all new writes are snapshot commits.
+``write_gold`` replaces the hour partitions it is given and
+``load_gold`` reads the live snapshot; the pre-txn plain-directory
+layout is still readable (legacy fallback in ``load_gold``), but all
+new writes are snapshot commits.
 """
 
 from __future__ import annotations
@@ -30,23 +31,20 @@ def _is_txn_root(path: str) -> bool:
     return os.path.isdir(os.path.join(path, "_versions"))
 
 
-def write_gold(df: DataFrame, path: str, overwrite_partitions: bool = True) -> str:
+def write_gold(df: DataFrame, path: str) -> str:
     """Transactional gold write, partitioned by dt/hour.
 
-    ``overwrite_partitions=True`` replaces only the partitions present in
-    ``df`` — the reference's "idempotent hourly re-run" (README.md:217-219)
-    — and carries every other partition's files into the new snapshot by
-    reference. ``False`` appends atomically. Both publish via pointer swap;
-    returns the committed version id.
+    Replaces only the partitions present in ``df`` — the reference's
+    "idempotent hourly re-run" (README.md:217-219) — and carries every
+    other partition's files into the new snapshot by reference. Publishes
+    via pointer swap; returns the committed version id.
     """
     t = TxnTable(path)
     pcols = [c for c in _PARTITION_COLS if c in df.columns]
     sort = [c for c in _SORT_COLS if c in df.columns]
-    if overwrite_partitions:
-        return t.overwrite_partitions(
-            df.sparkSession, df, partition_by=pcols or None, sort_within=sort or None
-        )
-    return t.append(df, partition_by=pcols or None, sort_within=sort or None)
+    return t.overwrite_partitions(
+        df.sparkSession, df, partition_by=pcols or None, sort_within=sort or None
+    )
 
 
 def load_gold(spark: SparkSession, path: str) -> DataFrame:
@@ -55,14 +53,3 @@ def load_gold(spark: SparkSession, path: str) -> DataFrame:
         return TxnTable(path).read(spark)
     return spark.read.option("basePath", path).parquet(path)
 
-
-def write_gold_txn(spark: SparkSession, df: DataFrame, path: str) -> str:
-    """Full-snapshot gold load (kept for callers that want overwrite-all
-    semantics explicitly; ``write_gold`` is the default path and shares the
-    same commit machinery)."""
-    return TxnTable(path).commit(
-        df,
-        partition_by=[c for c in _PARTITION_COLS if c in df.columns],
-        sort_within=[c for c in _SORT_COLS if c in df.columns],
-        operation="gold_load",
-    )

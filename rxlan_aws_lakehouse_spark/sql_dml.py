@@ -28,6 +28,13 @@ equi-condition) that leaves every scalar EXPRESSION to Spark itself
     INSERT OVERWRITE t ...            commit (spec-preserving overwrite)
     CREATE TABLE t (...) LOCATION     empty-snapshot create + register
     CREATE TABLE t ... AS SELECT      ctas: plan the SELECT, first commit
+    CREATE TABLE t LOCATION '<p>'
+      FROM DELTA|ICEBERG '<src>'      convert_from_delta / _iceberg
+                                      (zero-copy adoption)
+    CREATE TABLE t USING
+      DELTA_IMPORT|ICEBERG_IMPORT
+      LOCATION '<p>' [AS OF ...]      attach a foreign table (session
+                                      views; see "Foreign attachments")
     ALTER TABLE t ADD COLUMNS (...)   add_columns (metadata-only commit)
     ALTER TABLE t ALTER COLUMN c
       TYPE <wider>                    widen_column_type (metadata-only)
@@ -37,6 +44,7 @@ equi-condition) that leaves every scalar EXPRESSION to Spark itself
       CHECK (expr)                    add_check_constraint (validates
                                       existing rows, then in-flight)
     ALTER TABLE t DROP CONSTRAINT n   drop_constraint (metadata-only)
+    ALTER TABLE t DROP COLUMN c       drop_column (metadata-only)
     MERGE WITH SCHEMA EVOLUTION
       INTO t ...                      merge_upsert(merge_schema=True):
                                       source-only columns evolve the
@@ -45,21 +53,57 @@ equi-condition) that leaves every scalar EXPRESSION to Spark itself
     USE '<dir>'                       attach persistent catalog dir
     USE ns                            switch the current namespace
     DROP TABLE t                      unregister (data stays; external)
+                                      or detach an attachment
     DESCRIBE HISTORY t                metadata table as a DataFrame
     DESCRIBE DETAIL t                 manifest-only table summary
-    OPTIMIZE t                        compact (bin-packed small files)
+    OPTIMIZE t [COMPACT]              compact (bin-packed small files)
     OPTIMIZE t ZORDER BY (a, b)       zorder_by (Morton clustering)
-    VACUUM t [RETAIN n HOURS]         vacuum (snapshot retention)
+    VACUUM t [RETAIN n HOURS]
+      [KEEP n]                        vacuum (snapshot retention)
     RESTORE t TO VERSION AS OF n      restore (rollback as new commit)
     TRUNCATE TABLE t                  delete_where(true) — file-level
                                       drop, history intact
-    COPY INTO t FROM '<path>'         bulk file import as one append
+    COPY INTO t FROM '<path>'
+      [FILEFORMAT = fmt]              bulk file import as one append
     EXPORT TABLE t TO DELTA '<p>'     Delta mirror export / incremental
                                       sync (delta_export.py)
+    EXPORT TABLE t TO ICEBERG '<p>'   Iceberg mirror (iceberg_export.py)
     SELECT ... t VERSION AS OF n      time travel (pinned view rewrite)
     anything else                     spark.sql (reads: temp views;
                                       ns.table refs rewritten)
     ===============================  =================================
+
+Foreign attachments: ``CREATE TABLE t USING DELTA_IMPORT`` (optionally
+``VERSION AS OF n`` or ``TIMESTAMP AS OF '<ts>'``) or ``USING
+ICEBERG_IMPORT`` (optionally ``SNAPSHOT AS OF id`` or ``TIMESTAMP AS
+OF '<ts>'``) attaches a table this engine did not write. SELECTs read
+it through session views; each write verb parses once, then resolves
+its target in one lookup (``_writable``) and commits against the
+foreign table's own log/metadata:
+
+    ===============================  =================================
+    SQL statement                     Delta writer / Iceberg writer
+    ===============================  =================================
+    INSERT INTO / COPY INTO           append_delta / append_iceberg
+    INSERT OVERWRITE / TRUNCATE       overwrite_delta / overwrite_iceberg
+    UPDATE                            update_delta / update_iceberg
+    DELETE                            delete_delta / delete_iceberg
+    MERGE INTO                        merge_delta / merge_iceberg
+    OPTIMIZE                          optimize_delta /
+                                      rewrite_manifests_iceberg
+    OPTIMIZE COMPACT                  optimize_delta /
+                                      compact_data_files_iceberg
+    OPTIMIZE ZORDER BY (...)          optimize_delta / refused
+    VACUUM [RETAIN n HOURS]           vacuum_delta /
+                                      expire_snapshots_iceberg
+    RESTORE TO VERSION AS OF n        restore_delta / restore_iceberg
+    ===============================  =================================
+
+The writers run in ``auto`` mode: the SQL surface never upgrades a
+foreign protocol, and the router's ``strategy`` picks only the native
+store's encoding. An attachment pinned AS OF a snapshot is read-only:
+every write verb refuses it. KEEP n, MERGE WITH SCHEMA EVOLUTION and
+BY SOURCE DELETE need a txn table.
 
 Namespaces (round 12): every table name above may be ``ns.table``-
 qualified; bare names resolve through the current namespace (default
@@ -102,6 +146,7 @@ import os
 import re
 import time
 from dataclasses import dataclass, field
+from importlib import import_module
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -186,6 +231,29 @@ class _Cursor:
             raise ValueError(f"expected {what}, got {t!r}")
         self.i += 1
         return t.strip("`")
+
+    def ident_list(self, what: str) -> list[str]:
+        """A parenthesized, comma-separated identifier list."""
+        self.expect("(")
+        out = [self.ident(what)]
+        while self.accept(","):
+            out.append(self.ident(what))
+        self.expect(")")
+        return out
+
+    def alias(self, default: str, stop: str) -> str:
+        """An optional ``[AS] alias`` before the ``stop`` keyword."""
+        if self.accept("AS") or not (self.done() or self.kw() == stop):
+            return self.ident("alias")
+        return default
+
+    def string(self, err: str) -> str:
+        """The value of a quoted string literal; ``err`` if absent."""
+        t = self.peek()
+        if t is None or not t.startswith("'"):
+            raise ValueError(err)
+        self.i += 1
+        return t[1:-1].replace("''", "'")
 
     def qident(self, what: str) -> str:
         """A possibly namespace-qualified name: ``t`` or ``ns.t``."""
@@ -343,11 +411,7 @@ def _parse_merge(c: _Cursor) -> _Merge:
     evolve = c.accept("WITH", "SCHEMA", "EVOLUTION")
     c.expect("INTO")
     target = c.qident("target table")
-    t_alias = target.split(".")[-1]
-    if c.accept("AS"):
-        t_alias = c.ident("target alias")
-    elif c.peek() is not None and c.kw() not in ("USING",):
-        t_alias = c.ident("target alias")
+    t_alias = c.alias(target.split(".")[-1], "USING")
     c.expect("USING")
     if c.peek() == "(":
         depth = 0
@@ -366,11 +430,7 @@ def _parse_merge(c: _Cursor) -> _Merge:
         source_sql = _render(c.toks[start:c.i])
     else:
         source_sql = c.qident("source table")
-    s_alias = source_sql.split(".")[-1]
-    if c.accept("AS"):
-        s_alias = c.ident("source alias")
-    elif c.peek() is not None and c.kw() not in ("ON",):
-        s_alias = c.ident("source alias")
+    s_alias = c.alias(source_sql.split(".")[-1], "ON")
     if not _IDENT_RE.match(s_alias):
         raise ValueError("a subquery source needs an alias")
     c.expect("ON")
@@ -403,13 +463,7 @@ def _parse_merge(c: _Cursor) -> _Merge:
             if c.accept("*"):
                 m.not_matched.append(_NotMatchedClause(cond, None, None))
                 continue
-            c.expect("(")
-            cols = []
-            while True:
-                cols.append(c.ident("insert column"))
-                if not c.accept(","):
-                    break
-            c.expect(")")
+            cols = c.ident_list("insert column")
             c.expect("VALUES")
             c.expect("(")
             vals = []
@@ -527,6 +581,55 @@ def prune_triples_from_where(tokens: list[str]) -> list[tuple]:
     return out
 
 
+def _where_tail(c: _Cursor, quals: set[str]) -> list[str] | None:
+    """The optional ``WHERE <predicate>`` ending an UPDATE / DELETE,
+    target qualifiers stripped; None when the statement has none."""
+    where = None
+    if c.accept("WHERE"):
+        where = _strip_qualifier(c.take_until(()), quals)
+    if not c.done():
+        raise ValueError(
+            f"unexpected trailing tokens: {_render(c.toks[c.i:])!r}"
+        )
+    return where
+
+
+@dataclass(frozen=True)
+class _Attachment:
+    """A foreign Delta or Iceberg table attached under a SQL name.
+    Session-scoped and never persisted: the foreign log/metadata is the
+    source of truth. ``pinned`` (attached AS OF a snapshot) makes it
+    read-only."""
+
+    kind: str  # "delta" | "iceberg"
+    path: str
+    pinned: bool
+
+    @property
+    def fmt(self) -> str:
+        """The read format: ``delta_import`` or ``iceberg_import``."""
+        return f"{self.kind}_import"
+
+    def write(self, spark: SparkSession, fn: str, *args, **kwargs) -> dict:
+        """Run writer ``fn`` of ``delta_export`` / ``iceberg_export``
+        (by kind) against this table."""
+        mod = import_module(f"{__package__}.{self.kind}_export")
+        return getattr(mod, fn)(spark, self.path, *args, **kwargs)
+
+    def version(self, res: dict) -> str:
+        """The new head a writer reports: Delta log version or Iceberg
+        snapshot id."""
+        return str(res["version" if self.kind == "delta" else "snapshot_id"])
+
+
+# the id-based time-travel clause each attachment kind accepts besides
+# TIMESTAMP AS OF: (keyword, reader option, what the value names)
+_ATTACH_PIN = {
+    "delta": ("VERSION", "version", "a version number"),
+    "iceberg": ("SNAPSHOT", "snapshotId", "a snapshot id"),
+}
+
+
 class TxnSqlRouter:
     """The analyst write surface: register txn tables under SQL names,
     then type DML against them.
@@ -558,14 +661,10 @@ class TxnSqlRouter:
         self._spark = spark
         self._strategy = strategy
         self._tables: dict[str, TxnTable] = {}  # "ns.table" -> table
-        # foreign attachments ("ns.table" -> path): session views over
-        # format("delta_import") / format("iceberg_import"), never
-        # persisted.  Reads always; INSERT INTO appends (round 14)
-        # commit against the foreign log/metadata unless the
-        # attachment is PINNED to a time-travel snapshot.
-        self._foreign: dict[str, str] = {}
-        # "ns.table" -> (kind, pinned): kind in {"delta", "iceberg"}
-        self._foreign_kind: dict[str, tuple] = {}
+        # foreign attachments, "ns.table" -> attachment; disjoint from
+        # _tables (attach refuses a txn name, register replaces an
+        # attachment)
+        self._foreign: dict[str, _Attachment] = {}
         self._catalog_dir: str | None = None
         self._namespace = "default"
         from .sources.txn_source import register_txn_source
@@ -667,6 +766,7 @@ class TxnSqlRouter:
     ) -> TxnTable:
         t = table if isinstance(table, TxnTable) else TxnTable(table)
         key = self._key(name)
+        self._foreign.pop(key, None)
         self._tables[key] = t
         if view and t.current_version() is not None:
             self._refresh_view(key)
@@ -681,16 +781,27 @@ class TxnSqlRouter:
         ns, bare = key.split(".", 1)
         return f"__ns__{ns}__{bare}"
 
-    def _refresh_view(self, name: str) -> None:
-        key = self._key(name)
-        t = self._tables[key]
-        df = self._spark.read.format("txn").load(t.root)
+    def _publish_view(self, key: str, df: DataFrame) -> None:
+        """Expose ``df`` as the temp views of qualified name ``key``:
+        the mangled view always, the bare name when ``key`` lives in
+        the current namespace."""
         ns, bare = key.split(".", 1)
         if ns == self._namespace:
             df.createOrReplaceTempView(bare)
         df.createOrReplaceTempView(self._mangled_view(key))
 
-    def _resolve(self, name: str) -> tuple[str, TxnTable]:
+    def _refresh_view(self, name: str) -> None:
+        """Re-point a table's views at its current head (a reader pins
+        its snapshot at load time)."""
+        key = self._key(name)
+        att = self._foreign.get(key)
+        if att is None:
+            df = self._spark.read.format("txn").load(self._tables[key].root)
+        else:
+            df = self._spark.read.format(att.fmt).load(att.path)
+        self._publish_view(key, df)
+
+    def _resolve(self, name: str) -> TxnTable:
         key = self._key(name)
         t = self._tables.get(key)
         if t is None and self._catalog_dir is not None:
@@ -702,10 +813,33 @@ class TxnSqlRouter:
                 f"{name!r} is not a registered txn table "
                 f"(known: {sorted(self._tables)})"
             )
-        return name, t
+        return t
+
+    def _writable(
+        self, name: str, verb: str
+    ) -> tuple[TxnTable | None, _Attachment | None]:
+        """A write verb's target: ``(table, None)`` for a txn table,
+        ``(None, attachment)`` for a live foreign attachment. A pinned
+        attachment refuses every write here."""
+        att = self._foreign.get(self._key(name))
+        if att is None:
+            return self._resolve(name), None
+        if att.pinned:
+            raise ValueError(
+                f"{name} is pinned to a time-travel snapshot and is "
+                f"read-only; attach the live table to {verb}"
+            )
+        return None, att
+
+    def _write_schema(self, name: str, t: TxnTable | None) -> StructType:
+        """The schema a write to ``name`` must land in (an attachment's
+        is the one its session view resolved)."""
+        if t is None:
+            return self._spark.table(self._mangled_view(self._key(name))).schema
+        return self._target_schema(t)
 
     # ------------------------------------------------------------------
-    def sql(self, statement: str, strategy: str | None = None):
+    def sql(self, statement: str):
         """Execute one SQL statement. DML verbs dispatch to TxnTable;
         everything else goes straight to ``spark.sql``."""
         try:
@@ -720,15 +854,12 @@ class TxnSqlRouter:
         if not toks:
             raise ValueError("empty statement")
         verb = toks[0].upper()
-        strat = strategy or self._strategy
-        if strat not in ("cow", "dv"):
-            raise ValueError("strategy must be 'cow' or 'dv'")
         if verb == "MERGE":
-            return self._exec_merge(_parse_merge(_Cursor(toks)), strat)
+            return self._exec_merge(_parse_merge(_Cursor(toks)))
         if verb == "UPDATE":
-            return self._exec_update(_Cursor(toks), strat)
+            return self._exec_update(_Cursor(toks))
         if verb == "DELETE":
-            return self._exec_delete(_Cursor(toks), strat)
+            return self._exec_delete(_Cursor(toks))
         if verb == "INSERT":
             return self._exec_insert(_Cursor(toks))
         if verb == "DESCRIBE" and len(toks) >= 2 and (
@@ -748,16 +879,13 @@ class TxnSqlRouter:
         ):
             # only claim txn DDL: an explicit USING <other-format>
             # belongs to Spark's own catalog surface — except the
-            # read-only foreign attachments (DELTA_IMPORT,
-            # ICEBERG_IMPORT)
+            # foreign attachments (DELTA_IMPORT, ICEBERG_IMPORT)
             ups = [t.upper() for t in toks]
             if "USING" in ups:
                 nxt = ups[ups.index("USING") + 1 : ups.index("USING") + 2]
-                if nxt == ["DELTA_IMPORT"]:
-                    return self._exec_create_delta_import(_Cursor(toks))
-                if nxt == ["ICEBERG_IMPORT"]:
-                    return self._exec_create_iceberg_import(
-                        _Cursor(toks)
+                if nxt in (["DELTA_IMPORT"], ["ICEBERG_IMPORT"]):
+                    return self._exec_create_import(
+                        _Cursor(toks), nxt[0].split("_")[0].lower()
                     )
                 if nxt != ["TXN"]:
                     return self._spark.sql(statement)
@@ -794,27 +922,40 @@ class TxnSqlRouter:
                 loaded = self.use_catalog(
                     toks[1][1:-1].replace("''", "'")
                 )
-                return local_df(self._spark, 
-                    [("use_catalog", str(len(loaded)))],
-                    "operation string, version string",
-                )
+                return self._status("use_catalog", str(len(loaded)))
             # USE <ns>: switch the current namespace
             self.use_namespace(toks[1])
-            return local_df(self._spark, 
-                [("use_namespace", self._namespace)],
-                "operation string, version string",
-            )
+            return self._status("use_namespace", self._namespace)
         rewritten = self._rewrite_reads(toks)
         if rewritten is not None:
             return self._spark.sql(rewritten)
         return self._spark.sql(statement)
 
     # ------------------------------------------------------------------
-    def _result(self, name: str, operation: str, version: str):
+    def _status(
+        self,
+        operation: str,
+        version: str,
+        count: tuple[str, int] | None = None,
+    ) -> DataFrame:
+        """The 1-row ``(operation, version[, <count name>])`` result."""
+        row, ddl = (operation, version), "operation string, version string"
+        if count is not None:
+            row += (int(count[1]),)
+            ddl += f", {count[0]} bigint"
+        return local_df(self._spark, [row], ddl)
+
+    def _result(
+        self,
+        name: str,
+        operation: str,
+        version: str,
+        count: tuple[str, int] | None = None,
+    ) -> DataFrame:
+        """A write's result, after re-pointing ``name``'s views at the
+        new head so a following SELECT sees it."""
         self._refresh_view(name)
-        return local_df(self._spark, 
-            [(operation, version)], "operation string, version string"
-        )
+        return self._status(operation, version, count)
 
     def _target_schema(self, t: TxnTable) -> StructType:
         v = t.current_version()
@@ -822,24 +963,12 @@ class TxnSqlRouter:
             raise ValueError(f"table at {t.root} has no committed version")
         return StructType.fromJson(t._meta(v)["schema"])
 
-    def _exec_merge(self, m: _Merge, strat: str):
+    def _exec_merge(self, m: _Merge):
         spark = self._spark
-        fkey = self._key(m.target)
-        foreign_kind = None
-        if fkey in self._foreign:
-            # MERGE INTO <foreign attachment> (round 16): the same
-            # ANSI result-set plan below, dispatched to merge_delta /
-            # merge_iceberg in auto mode (never-upgrade-protocol-from-
-            # SQL — the strat knob only picks the NATIVE store's
-            # encoding)
-            foreign_kind, pinned = self._foreign_kind.get(
-                fkey, ("delta", False)
-            )
-            if pinned:
-                raise ValueError(
-                    f"{m.target} is pinned to a time-travel snapshot "
-                    "and is read-only; attach the live table to MERGE"
-                )
+        t, att = self._writable(m.target, "MERGE")
+        if att is not None:
+            # MERGE INTO <foreign attachment>: the same ANSI result-set
+            # plan below, committed by merge_delta / merge_iceberg
             if m.evolve:
                 raise ValueError(
                     "MERGE WITH SCHEMA EVOLUTION needs a native txn "
@@ -850,16 +979,9 @@ class TxnSqlRouter:
                     "WHEN NOT MATCHED BY SOURCE THEN DELETE (full "
                     "sync) needs a native txn table"
                 )
-            fmt = (
-                "delta_import"
-                if foreign_kind == "delta"
-                else "iceberg_import"
-            )
-            tgt_raw = spark.read.format(fmt).load(self._foreign[fkey])
+            tgt_raw = spark.read.format(att.fmt).load(att.path)
             schema = tgt_raw.schema
-            name, t = m.target, None
         else:
-            name, t = self._resolve(m.target)
             schema = self._target_schema(t)
             tgt_raw = spark.read.format("txn").load(t.root)
         tgt = tgt_raw.alias(m.t_alias)
@@ -914,7 +1036,7 @@ class TxnSqlRouter:
                     f"UPDATE SET names unknown target columns {bad}"
                 )
         if m.nm_by_source_delete:
-            return self._exec_sync_full(m, name, t, schema, src)
+            return self._exec_sync_full(m, t, schema, src)
         branches = []
         delete_frame = None
         if m.matched:
@@ -1022,41 +1144,21 @@ class TxnSqlRouter:
                 for f in schema.fields
             ]
         )
-        if foreign_kind is not None:
-            if foreign_kind == "delta":
-                from .delta_export import merge_delta
-
-                res = merge_delta(
-                    self._spark,
-                    self._foreign[fkey],
-                    updates,
-                    keys,
-                    delete_keys=delete_frame,
-                )
-                ver = str(res["version"])
-            else:
-                from .iceberg_export import merge_iceberg
-
-                res = merge_iceberg(
-                    self._spark,
-                    self._foreign[fkey],
-                    updates,
-                    keys,
-                    delete_keys=delete_frame,
-                )
-                ver = str(res["snapshot_id"])
-            self._refresh_foreign_views(fkey, foreign_kind)
-            return local_df(self._spark, 
-                [
-                    (
-                        f"merge_foreign_{res['mode']}",
-                        ver,
-                        int(res["n_matched"]),
-                    )
-                ],
-                "operation string, version string, n_matched bigint",
+        if att is not None:
+            res = att.write(
+                spark,
+                f"merge_{att.kind}",
+                updates,
+                keys,
+                delete_keys=delete_frame,
             )
-        op = "merge_upsert" if strat == "cow" else "merge_upsert_dv"
+            return self._result(
+                m.target,
+                f"merge_foreign_{res['mode']}",
+                att.version(res),
+                ("n_matched", res["n_matched"]),
+            )
+        op = "merge_upsert" if self._strategy == "cow" else "merge_upsert_dv"
         version = getattr(t, op)(
             self._spark,
             updates,
@@ -1064,9 +1166,9 @@ class TxnSqlRouter:
             delete_keys=delete_frame,
             merge_schema=m.evolve,
         )
-        return self._result(name, op, version)
+        return self._result(m.target, op, version)
 
-    def _exec_sync_full(self, m: _Merge, name, t, schema, src):
+    def _exec_sync_full(self, m: _Merge, t, schema, src):
         """The canonical three-clause MERGE (UPDATE SET * / INSERT * /
         NOT MATCHED BY SOURCE DELETE) IS a full-snapshot sync — dispatch
         to ``sync_full``, which rewrites only the files holding a real
@@ -1106,23 +1208,14 @@ class TxnSqlRouter:
         version = t.sync_full(
             self._spark, aligned, keys=[tk for tk, _ in m.on]
         )
-        return self._result(name, "sync_full", version)
+        return self._result(m.target, "sync_full", version)
 
-    def _exec_update(self, c: _Cursor, strat: str = "cow"):
+    def _exec_update(self, c: _Cursor):
         c.expect("UPDATE")
         target = c.qident("table")
-        if self._key(target) in self._foreign:
-            return self._exec_update_foreign(
-                c, target, self._key(target)
-            )
-        alias = target.split(".")[-1]
-        if c.accept("AS"):
-            alias = c.ident("alias")
-        elif c.kw() != "SET":
-            alias = c.ident("alias")
-        name, t = self._resolve(target)
+        t, att = self._writable(target, "UPDATE")
+        quals = {target, c.alias(target.split(".")[-1], "SET")}
         c.expect("SET")
-        quals = {target, alias}
         sets: dict[str, str] = {}
         while True:
             col = c.ident("SET column")
@@ -1141,59 +1234,62 @@ class TxnSqlRouter:
             )
             if not c.accept(","):
                 break
-        cond = F.lit(True)
-        prune: list[tuple] = []
-        if c.accept("WHERE"):
-            where = _strip_qualifier(c.take_until(()), quals)
-            cond = F.expr(_render(where))
-            prune = prune_triples_from_where(where)
-        if not c.done():
-            raise ValueError(
-                f"unexpected trailing tokens: "
-                f"{_render(c.toks[c.i:])!r}"
+        where = _where_tail(c, quals)
+        if att is not None:
+            res = att.write(
+                self._spark,
+                f"update_{att.kind}",
+                sets,
+                "true" if where is None else _render(where),
             )
-        op = "update_where" if strat == "cow" else "update_where_dv"
+            return self._result(
+                target,
+                f"update_foreign_{res['mode']}",
+                att.version(res),
+                ("n_matched", res["n_matched"]),
+            )
+        op = "update_where" if self._strategy == "cow" else "update_where_dv"
         version = getattr(t, op)(
             self._spark,
-            cond,
+            F.lit(True) if where is None else F.expr(_render(where)),
             {k: F.expr(v) for k, v in sets.items()},
-            prune=prune or None,
+            prune=prune_triples_from_where(where or []) or None,
         )
-        return self._result(name, op, version)
+        return self._result(target, op, version)
 
-    def _exec_delete(self, c: _Cursor, strat: str):
+    def _exec_delete(self, c: _Cursor):
         c.expect("DELETE", "FROM")
         target = c.qident("table")
-        if self._key(target) in self._foreign:
-            return self._exec_delete_foreign(
-                c, target, self._key(target)
+        t, att = self._writable(target, "DELETE")
+        quals = {target, c.alias(target.split(".")[-1], "WHERE")}
+        where = _where_tail(c, quals)
+        if att is not None:
+            # Delta: a deletion-vector write when the protocol already
+            # carries the feature, else copy-on-write; Iceberg: a
+            # position-delete file (v2) or Puffin deletion vectors (v3)
+            res = att.write(
+                self._spark,
+                f"delete_{att.kind}",
+                "true" if where is None else _render(where),
             )
-        alias = target.split(".")[-1]
-        if c.accept("AS"):
-            alias = c.ident("alias")
-        elif not c.done() and c.kw() != "WHERE":
-            alias = c.ident("alias")
-        name, t = self._resolve(target)
-        quals = {target, alias}
-        cond = F.lit(True)
-        prune: list[tuple] = []
-        if c.accept("WHERE"):
-            where = _strip_qualifier(c.take_until(()), quals)
-            cond = F.expr(_render(where))
-            prune = prune_triples_from_where(where)
-        if not c.done():
-            raise ValueError(
-                f"unexpected trailing tokens: "
-                f"{_render(c.toks[c.i:])!r}"
+            return self._result(
+                target,
+                f"delete_foreign_{res['mode']}",
+                att.version(res),
+                ("n_matched", res["n_matched"]),
             )
-        op = "delete_where" if strat == "cow" else "delete_where_deferred"
-        version = getattr(t, op)(self._spark, cond, prune=prune or None)
-        return self._result(name, op, version)
+        op = "delete_where" if self._strategy == "cow" else "delete_where_deferred"
+        version = getattr(t, op)(
+            self._spark,
+            F.lit(True) if where is None else F.expr(_render(where)),
+            prune=prune_triples_from_where(where or []) or None,
+        )
+        return self._result(target, op, version)
 
     # -- utility statements (Delta's SQL maintenance surface) ----------
     def _exec_describe_history(self, c: _Cursor):
         c.expect("DESCRIBE", "HISTORY")
-        name, t = self._resolve(c.qident("table"))
+        t = self._resolve(c.qident("table"))
         return self._spark.read.format("txn").option(
             "metadata", "history"
         ).load(t.root)
@@ -1213,15 +1309,9 @@ class TxnSqlRouter:
         from .delta_export import export_delta_sync
 
         c.expect("EXPORT", "TABLE")
-        name, t = self._resolve(c.qident("table"))
+        t = self._resolve(c.qident("table"))
         if c.accept("TO", "ICEBERG"):
-            path_tok = c.peek()
-            if path_tok is None or not path_tok.startswith("'"):
-                raise ValueError(
-                    "EXPORT TABLE expects TO ICEBERG '<path>'"
-                )
-            c.i += 1
-            dest = path_tok[1:-1].replace("''", "'")
+            dest = c.string("EXPORT TABLE expects TO ICEBERG '<path>'")
             from .iceberg_export import export_iceberg_sync
 
             iout = export_iceberg_sync(t, dest)
@@ -1235,16 +1325,9 @@ class TxnSqlRouter:
                 if iout.get("snapshot_seq") is not None
                 else "noop"
             )
-            return local_df(self._spark, 
-                [(iop, idetail)],
-                "operation string, version string",
-            )
+            return self._status(iop, idetail)
         c.expect("TO", "DELTA")
-        path_tok = c.peek()
-        if path_tok is None or not path_tok.startswith("'"):
-            raise ValueError("EXPORT TABLE expects TO DELTA '<path>'")
-        c.i += 1
-        dest = path_tok[1:-1].replace("''", "'")
+        dest = c.string("EXPORT TABLE expects TO DELTA '<path>'")
         out = export_delta_sync(t, dest)
         op = (
             "export_delta"
@@ -1256,9 +1339,7 @@ class TxnSqlRouter:
             if out.get("commit") is not None
             else "noop"
         )
-        return local_df(self._spark, 
-            [(op, detail)], "operation string, version string"
-        )
+        return self._status(op, detail)
 
     def _exec_describe_detail(self, c: _Cursor):
         """``DESCRIBE DETAIL t`` (Delta's table-summary statement): one
@@ -1266,7 +1347,7 @@ class TxnSqlRouter:
         — no data file opened, no directory listed (KBs to describe a
         100 TB table, same contract as the metadata tables)."""
         c.expect("DESCRIBE", "DETAIL")
-        name, t = self._resolve(c.qident("table"))
+        t = self._resolve(c.qident("table"))
         v = t.current_version()
         if v is None:
             raise ValueError(f"table at {t.root} has no committed version")
@@ -1298,32 +1379,49 @@ class TxnSqlRouter:
     def _exec_optimize(self, c: _Cursor):
         c.expect("OPTIMIZE")
         target = c.qident("table")
-        if self._key(target) in self._foreign:
-            return self._exec_optimize_foreign(
-                c, target, self._key(target)
+        t, att = self._writable(target, "OPTIMIZE")
+        compact = c.accept("COMPACT")
+        zorder = (
+            c.ident_list("ZORDER column") if c.accept("ZORDER", "BY") else None
+        )
+        if not c.done():
+            raise ValueError(
+                "OPTIMIZE takes at most COMPACT or ZORDER BY (...) "
+                f"(got {c.peek()!r})"
             )
-        name, t = self._resolve(target)
-        if c.accept("ZORDER", "BY"):
-            c.expect("(")
-            cols = []
-            while True:
-                cols.append(c.ident("zorder column"))
-                if not c.accept(","):
-                    break
-            c.expect(")")
-            version = t.zorder_by(self._spark, cols)
-            return self._result(name, "zorder", version)
-        version = t.compact(self._spark)
-        return self._result(name, "compact", version)
+        if att is None:
+            if zorder is not None:
+                version = t.zorder_by(self._spark, zorder)
+                return self._result(target, "zorder", version)
+            return self._result(target, "compact", t.compact(self._spark))
+        if att.kind == "delta":
+            # Delta's OPTIMIZE already IS bin-pack compaction (COMPACT
+            # is a no-op synonym), a pure dataChange=false commit;
+            # ZORDER BY re-clusters every live file by Morton order
+            res = att.write(self._spark, "optimize_delta", zorder_by=zorder)
+            op, n = "optimize_foreign_delta", res["n_files_removed"]
+        elif zorder is not None:
+            raise ValueError(
+                "ZORDER BY is a Delta layout op; an Iceberg "
+                "attachment takes OPTIMIZE [COMPACT]"
+            )
+        elif compact:
+            # bin-pack the undersized data files (delete-carrying files
+            # rewritten with their dead rows purged) in one snapshot
+            res = att.write(self._spark, "compact_data_files_iceberg")
+            op, n = "compact_foreign_iceberg", res["n_rewritten"]
+        else:
+            # merge the data manifests: an O(metadata) replace snapshot
+            res = att.write(self._spark, "rewrite_manifests_iceberg")
+            op, n = "optimize_foreign_iceberg", res["n_manifests_before"]
+        return self._result(
+            target, op, att.version(res), ("n_compacted", n)
+        )
 
     def _exec_vacuum(self, c: _Cursor):
         c.expect("VACUUM")
         target = c.qident("table")
-        if self._key(target) in self._foreign:
-            return self._exec_vacuum_foreign(
-                c, target, self._key(target)
-            )
-        name, t = self._resolve(target)
+        t, att = self._writable(target, "VACUUM")
         retain = None
         keep = 2
         while not c.done():
@@ -1331,19 +1429,31 @@ class TxnSqlRouter:
                 retain = float(c.peek())
                 c.i += 1
                 c.expect("HOURS")
-            elif c.accept("KEEP"):
+            elif att is None and c.accept("KEEP"):
                 keep = int(c.peek())
                 c.i += 1
             else:
                 raise ValueError(
                     f"unexpected VACUUM clause at {c.peek()!r}"
                 )
-        dropped = t.vacuum(keep=keep, retain_hours=retain)
-        self._refresh_view(name)
-        return local_df(self._spark, 
-            [("vacuum", f"dropped={len(dropped)}")],
-            "operation string, version string",
-        )
+        if att is None:
+            op, n = "vacuum", len(t.vacuum(keep=keep, retain_hours=retain))
+        elif att.kind == "delta":
+            # delete unreferenced data/DV files older than the window
+            res = att.write(self._spark, "vacuum_delta", retain_hours=retain)
+            op, n = "vacuum_foreign_delta", res["n_removed"]
+        else:
+            # expire older snapshots, GC the files only they reference
+            cutoff = (
+                None
+                if retain is None
+                else int((time.time() - retain * 3600.0) * 1000)
+            )
+            res = att.write(
+                self._spark, "expire_snapshots_iceberg", older_than_ms=cutoff
+            )
+            op, n = "vacuum_foreign_iceberg", res["n_files_deleted"]
+        return self._result(target, op, f"dropped={int(n)}")
 
     def _exec_create(self, c: _Cursor):
         """``CREATE TABLE name (<ddl>) USING TXN [PARTITIONED BY (...)]
@@ -1362,22 +1472,13 @@ class TxnSqlRouter:
         c.accept("USING", "TXN")
         partition_by: list[str] = []
         if c.accept("PARTITIONED", "BY"):
-            c.expect("(")
-            while True:
-                partition_by.append(c.ident("partition column"))
-                if not c.accept(","):
-                    break
-            c.expect(")")
+            partition_by = c.ident_list("partition column")
         if not c.accept("LOCATION"):
             raise ValueError(
                 "CREATE TABLE needs LOCATION '<path>' (txn tables are "
                 "path-addressed)"
             )
-        loc_tok = c.peek()
-        if loc_tok is None or not loc_tok.startswith("'"):
-            raise ValueError("LOCATION expects a quoted path")
-        c.i += 1
-        root = loc_tok[1:-1].replace("''", "'")
+        root = c.string("LOCATION expects a quoted path")
         select_sql = None
         from_delta = None
         from_iceberg = None
@@ -1392,11 +1493,7 @@ class TxnSqlRouter:
             # convert_from_delta — the reverse of Delta's CONVERT TO
             # DELTA); the partition spec comes from the log, not the
             # statement
-            src_tok = c.peek()
-            if src_tok is None or not src_tok.startswith("'"):
-                raise ValueError("FROM DELTA expects a quoted path")
-            c.i += 1
-            from_delta = src_tok[1:-1].replace("''", "'")
+            from_delta = c.string("FROM DELTA expects a quoted path")
             if partition_by:
                 raise ValueError(
                     "FROM DELTA derives the partition spec from the "
@@ -1409,11 +1506,7 @@ class TxnSqlRouter:
             # adopted as a txn column mapping; the converted table is
             # unpartitioned by design (identity partition columns live
             # inside Iceberg data files)
-            src_tok = c.peek()
-            if src_tok is None or not src_tok.startswith("'"):
-                raise ValueError("FROM ICEBERG expects a quoted path")
-            c.i += 1
-            from_iceberg = src_tok[1:-1].replace("''", "'")
+            from_iceberg = c.string("FROM ICEBERG expects a quoted path")
             if partition_by:
                 raise ValueError(
                     "FROM ICEBERG adopts unpartitioned (identity "
@@ -1494,7 +1587,8 @@ class TxnSqlRouter:
         COLUMN c TYPE t`` → metadata-only widening. Narrowing / lossy
         type changes still fail loudly rather than guessing."""
         c.expect("ALTER", "TABLE")
-        name, t = self._resolve(c.qident("table"))
+        name = c.qident("table")
+        t = self._resolve(name)
         if c.accept("ADD", "COLUMNS") or c.accept("ADD", "COLUMN"):
             c.expect("(")
             ddl = _render(c.take_until(((")",),)))
@@ -1555,328 +1649,169 @@ class TxnSqlRouter:
             "version string",
         )
 
-    def _exec_create_delta_import(self, c: _Cursor):
-        """``CREATE TABLE name USING DELTA_IMPORT LOCATION '<path>'
-        [VERSION AS OF n]`` — attach a FOREIGN Delta table (one this
-        engine did not write) as a read-only session view over
-        ``format("delta_import")`` (sources/delta_import_source.py):
-        checkpoint-seeded log replay, authoritative partitionValues,
-        columnMapping=name resolution, add.stats file skipping. The
-        attachment is session-scoped (nothing is persisted — the
-        foreign log is the source of truth); DML against it fails as
-        it would against any non-txn view."""
-        from .sources.delta_import_source import (
-            register_delta_import_source,
-        )
-
+    def _exec_create_import(self, c: _Cursor, kind: str):
+        """``CREATE TABLE [IF NOT EXISTS] name USING DELTA_IMPORT |
+        ICEBERG_IMPORT LOCATION '<path>' [<pin>]`` — attach a FOREIGN
+        table (one this engine did not write) as session views over
+        ``format("delta_import")`` / ``format("iceberg_import")``
+        (sources/*_import_source.py). ``<pin>`` is ``VERSION AS OF n``
+        (Delta), ``SNAPSHOT AS OF id`` (Iceberg) or ``TIMESTAMP AS OF
+        '<ts>'`` (both; Iceberg resolves it through the metadata
+        snapshot-log) and makes the attachment read-only. Nothing is
+        persisted; DROP TABLE detaches without touching the foreign
+        tree."""
         c.expect("CREATE", "TABLE")
         if_not_exists = c.accept("IF", "NOT", "EXISTS")
         name = c.qident("table")
-        c.expect("USING", "DELTA_IMPORT")
+        using = f"{kind.upper()}_IMPORT"
+        c.expect("USING", using)
         if not c.accept("LOCATION"):
             raise ValueError(
-                "CREATE TABLE ... USING DELTA_IMPORT needs "
-                "LOCATION '<path>'"
+                f"CREATE TABLE ... USING {using} needs LOCATION '<path>'"
             )
-        loc_tok = c.peek()
-        if loc_tok is None or not loc_tok.startswith("'"):
-            raise ValueError("LOCATION expects a quoted path")
-        c.i += 1
-        path = loc_tok[1:-1].replace("''", "'")
-        version = None
-        timestamp = None
-        if c.accept("VERSION", "AS", "OF"):
-            vt = c.peek()
-            if vt is None:
-                raise ValueError("VERSION AS OF needs a version number")
+        path = c.string("LOCATION expects a quoted path")
+        pin_kw, pin_option, pin_what = _ATTACH_PIN[kind]
+        options: dict[str, object] = {}
+        if c.accept(pin_kw, "AS", "OF"):
+            tok = c.peek()
+            if tok is None:
+                raise ValueError(f"{pin_kw} AS OF needs {pin_what}")
             c.i += 1
-            version = int(vt)
+            options[pin_option] = int(tok)
         elif c.accept("TIMESTAMP", "AS", "OF"):
-            tt = c.peek()
-            if tt is None or not tt.startswith("'"):
-                raise ValueError(
-                    "TIMESTAMP AS OF needs a quoted timestamp"
-                )
-            c.i += 1
-            timestamp = tt[1:-1].replace("''", "'")
+            options["timestampAsOf"] = c.string(
+                "TIMESTAMP AS OF needs a quoted timestamp"
+            )
         key = self._key(name)
-        # Refuse to shadow an existing table: attaching over a txn
-        # table would overwrite its temp views while leaving the stale
-        # entry in self._tables (SHOW TABLES lists it, SELECTs fail
-        # after DROP takes the _foreign branch) — same guard as
-        # _exec_create's 'table already exists'.
+        # Refuse to shadow a txn table: its temp views would be
+        # overwritten while its registry entry (SHOW TABLES, DROP)
+        # stays — same guard as _exec_create's 'table already exists'.
         if key in self._tables:
             raise ValueError(
                 f"table {name} already exists (txn table); DROP it "
-                "before attaching a foreign Delta table under the name"
+                f"before attaching a foreign {kind.capitalize()} table "
+                "under the name"
             )
-        if key in self._foreign:
+        known = self._foreign.get(key)
+        if known is not None:
             if if_not_exists:
-                return local_df(self._spark, 
-                    [("attach_delta_import_exists", self._foreign[key])],
-                    "operation string, version string",
-                )
+                return self._status(f"attach_{using.lower()}_exists", known.path)
             raise ValueError(
                 f"table {name} already exists (foreign attachment at "
-                f"{self._foreign[key]!r}); use IF NOT EXISTS or DROP it"
+                f"{known.path!r}); use IF NOT EXISTS or DROP it"
             )
-        register_delta_import_source(self._spark)
-        reader = self._spark.read.format("delta_import")
-        if version is not None:
-            reader = reader.option("version", version)
-        if timestamp is not None:
-            reader = reader.option("timestampAsOf", timestamp)
-        df = reader.load(path)
-        ns, bare = key.split(".", 1)
-        if ns == self._namespace:
-            df.createOrReplaceTempView(bare)
-        df.createOrReplaceTempView(self._mangled_view(key))
-        self._foreign[key] = path
-        self._foreign_kind[key] = (
-            "delta",
-            version is not None or timestamp is not None,
-        )
-        return local_df(self._spark, 
-            [("attach_delta_import", path)],
-            "operation string, version string",
-        )
-
-    def _exec_create_iceberg_import(self, c: _Cursor):
-        """``CREATE TABLE name USING ICEBERG_IMPORT LOCATION '<path>'
-        [SNAPSHOT AS OF <id> | TIMESTAMP AS OF '<ts>']`` — attach a
-        read-only FOREIGN Iceberg table (round 13;
-        iceberg_import_source.py, the Iceberg twin of the DELTA_IMPORT
-        verb; TIMESTAMP AS OF resolves through the metadata
-        snapshot-log, round 14).  Session-scoped views over the
-        metadata-replayed snapshot; DROP TABLE detaches without
-        touching the foreign tree."""
-        from .sources.iceberg_import_source import (
-            register_iceberg_import_source,
-        )
-
-        c.expect("CREATE", "TABLE")
-        if_not_exists = c.accept("IF", "NOT", "EXISTS")
-        name = c.qident("table")
-        c.expect("USING", "ICEBERG_IMPORT")
-        if not c.accept("LOCATION"):
-            raise ValueError(
-                "CREATE TABLE ... USING ICEBERG_IMPORT needs "
-                "LOCATION '<path>'"
+        if kind == "delta":
+            from .sources.delta_import_source import (
+                register_delta_import_source as register_source,
             )
-        loc_tok = c.peek()
-        if loc_tok is None or not loc_tok.startswith("'"):
-            raise ValueError("LOCATION expects a quoted path")
-        c.i += 1
-        path = loc_tok[1:-1].replace("''", "'")
-        snapshot = None
-        timestamp = None
-        if c.accept("SNAPSHOT", "AS", "OF"):
-            st = c.peek()
-            if st is None:
-                raise ValueError("SNAPSHOT AS OF needs a snapshot id")
-            c.i += 1
-            snapshot = int(st)
-        elif c.accept("TIMESTAMP", "AS", "OF"):
-            tt = c.peek()
-            if tt is None or not tt.startswith("'"):
-                raise ValueError(
-                    "TIMESTAMP AS OF needs a quoted timestamp"
-                )
-            c.i += 1
-            timestamp = tt[1:-1].replace("''", "'")
-        key = self._key(name)
-        # same shadow guard as the Delta attach
-        if key in self._tables:
-            raise ValueError(
-                f"table {name} already exists (txn table); DROP it "
-                "before attaching a foreign Iceberg table under the name"
+        else:
+            from .sources.iceberg_import_source import (
+                register_iceberg_import_source as register_source,
             )
-        if key in self._foreign:
-            if if_not_exists:
-                return local_df(self._spark, 
-                    [
-                        (
-                            "attach_iceberg_import_exists",
-                            self._foreign[key],
-                        )
-                    ],
-                    "operation string, version string",
-                )
-            raise ValueError(
-                f"table {name} already exists (foreign attachment at "
-                f"{self._foreign[key]!r}); use IF NOT EXISTS or DROP it"
-            )
-        register_iceberg_import_source(self._spark)
-        reader = self._spark.read.format("iceberg_import")
-        if snapshot is not None:
-            reader = reader.option("snapshotId", snapshot)
-        if timestamp is not None:
-            reader = reader.option("timestampAsOf", timestamp)
-        df = reader.load(path)
-        ns, bare = key.split(".", 1)
-        if ns == self._namespace:
-            df.createOrReplaceTempView(bare)
-        df.createOrReplaceTempView(self._mangled_view(key))
-        self._foreign[key] = path
-        self._foreign_kind[key] = (
-            "iceberg",
-            snapshot is not None or timestamp is not None,
-        )
-        return local_df(self._spark, 
-            [("attach_iceberg_import", path)],
-            "operation string, version string",
-        )
+        register_source(self._spark)
+        att = _Attachment(kind, path, pinned=bool(options))
+        reader = self._spark.read.format(att.fmt).options(**options)
+        self._publish_view(key, reader.load(path))
+        self._foreign[key] = att
+        return self._status(f"attach_{using.lower()}", path)
 
     def _exec_drop(self, c: _Cursor):
         c.expect("DROP", "TABLE")
         name = c.qident("table")
-        key_f = self._key(name)
-        if key_f in self._foreign:
-            # foreign attachment: just drop the views
-            del self._foreign[key_f]
-            self._foreign_kind.pop(key_f, None)
-            ns, bare = key_f.split(".", 1)
-            if ns == self._namespace:
-                self._spark.catalog.dropTempView(bare)
-            self._spark.catalog.dropTempView(self._mangled_view(key_f))
-            return local_df(self._spark, 
-                [("detach_foreign", key_f)],
-                "operation string, version string",
-            )
-        self._resolve(name)
         key = self._key(name)
-        del self._tables[key]
+        if self._foreign.pop(key, None) is not None:
+            op = "detach_foreign"  # the foreign tree is untouched
+        else:
+            self._resolve(name)
+            del self._tables[key]
+            if self._catalog_dir is not None:
+                try:
+                    os.unlink(
+                        os.path.join(self._catalog_dir, f"{key}.json")
+                    )
+                except FileNotFoundError:
+                    pass
+            op = "drop"
         ns, bare = key.split(".", 1)
         if ns == self._namespace:
             self._spark.catalog.dropTempView(bare)
         self._spark.catalog.dropTempView(self._mangled_view(key))
-        if self._catalog_dir is not None:
-            try:
-                os.unlink(
-                    os.path.join(self._catalog_dir, f"{key}.json")
-                )
-            except FileNotFoundError:
-                pass
-        return local_df(self._spark, 
-            [("drop", key)], "operation string, version string"
-        )
+        return self._status(op, key)
 
     def _exec_restore(self, c: _Cursor):
         c.expect("RESTORE")
         c.accept("TABLE")
         target = c.qident("table")
+        t, att = self._writable(target, "RESTORE")
         c.expect("TO", "VERSION", "AS", "OF")
         v = c.peek()
         if v is None:
             raise ValueError("RESTORE needs a version")
         c.i += 1
-        key = self._key(target)
-        if key in self._foreign:
-            # RESTORE on an attachment (round 16): Delta restores to a
-            # log version (new commit, history preserved); Iceberg
-            # re-points current-snapshot-id (spec rollback)
-            kind, pinned = self._foreign_kind.get(
-                key, ("delta", False)
+        if att is not None:
+            # Delta restores to a log version (a new commit, history
+            # preserved); Iceberg re-points current-snapshot-id
+            res = att.write(self._spark, f"restore_{att.kind}", int(v))
+            return self._result(
+                target, f"restore_foreign_{att.kind}", att.version(res)
             )
-            if pinned:
-                raise ValueError(
-                    f"{target} is pinned to a time-travel snapshot "
-                    "and is read-only; attach the live table to "
-                    "RESTORE"
-                )
-            if kind == "delta":
-                from .delta_export import restore_delta
-
-                res = restore_delta(
-                    self._spark, self._foreign[key], int(v)
-                )
-                ver = str(res["version"])
-            else:
-                from .iceberg_export import restore_iceberg
-
-                res = restore_iceberg(
-                    self._spark, self._foreign[key], int(v)
-                )
-                ver = str(res["snapshot_id"])
-            self._refresh_foreign_views(key, kind)
-            return local_df(self._spark, 
-                [(f"restore_foreign_{kind}", ver)],
-                "operation string, version string",
-            )
-        name, t = self._resolve(target)
         version = t.restore(
             self._spark, v if v.startswith("v") else f"v{int(v):08d}"
         )
-        return self._result(name, "restore", version)
+        return self._result(target, "restore", version)
 
     def _exec_truncate(self, c: _Cursor):
-        """``TRUNCATE TABLE t`` (round 16): delete every row, keep
-        schema and history.  Native tables route through
-        ``delete_where(true)`` — a file-level drop, no rewrite, time
-        travel intact.  A foreign attachment commits an EMPTY
-        overwrite (``overwrite_delta`` tombstones every live file;
-        ``overwrite_iceberg``'s manifest list goes empty)."""
+        """``TRUNCATE TABLE t``: delete every row, keep schema and
+        history.  Native tables route through ``delete_where(true)`` —
+        a file-level drop, no rewrite, time travel intact.  A foreign
+        attachment commits an EMPTY overwrite (``overwrite_delta``
+        tombstones every live file; ``overwrite_iceberg``'s manifest
+        list goes empty)."""
         c.expect("TRUNCATE", "TABLE")
         target = c.qident("table")
         if not c.done():
             raise ValueError(
                 f"unexpected TRUNCATE clause at {c.peek()!r}"
             )
-        key = self._key(target)
-        if key in self._foreign:
-            kind, pinned = self._foreign_kind.get(
-                key, ("delta", False)
-            )
-            if pinned:
-                raise ValueError(
-                    f"{target} is pinned to a time-travel snapshot "
-                    "and is read-only; attach the live table to "
-                    "TRUNCATE"
-                )
-            schema = self._spark.table(self._mangled_view(key)).schema
-            empty = local_df(self._spark, [], schema)
-            return self._foreign_append(
-                key, kind, empty, op="truncate"
-            )
-        name, t = self._resolve(target)
+        t, att = self._writable(target, "TRUNCATE")
+        if att is not None:
+            empty = local_df(self._spark, [], self._write_schema(target, t))
+            return self._foreign_append(target, att, empty, "truncate")
         version = t.delete_where(self._spark, F.lit(True))
-        return self._result(name, "truncate", version)
+        return self._result(target, "truncate", version)
+
+    def _foreign_append(
+        self, target: str, att: _Attachment, out: DataFrame, op: str
+    ):
+        """Commit ``out`` against an attachment's own log/metadata:
+        ``append_*`` for INSERT INTO / COPY INTO, the one-commit
+        ``overwrite_*`` (every live file tombstoned, the new rows added;
+        CDF readers synthesize the delete/insert rows) for INSERT
+        OVERWRITE / TRUNCATE."""
+        replaces = op in ("overwrite", "truncate")
+        fn = f"{'overwrite' if replaces else 'append'}_{att.kind}"
+        res = att.write(self._spark, fn, out)
+        return self._result(
+            target, f"{op}_foreign_{att.kind}", att.version(res)
+        )
 
     def _exec_copy(self, c: _Cursor):
         """``COPY INTO t FROM '<path>' FILEFORMAT = PARQUET|JSON|CSV``:
-        bulk file import as one atomic append, schema-aligned.  A
-        FOREIGN attachment target (round 15, r14 verdict task 7)
-        routes the append through the foreign commit protocol —
-        ``append_delta`` / ``append_iceberg`` — exactly like
-        ``INSERT INTO``."""
+        bulk file import as one atomic append, schema-aligned; a
+        foreign attachment appends exactly like ``INSERT INTO``."""
         c.expect("COPY", "INTO")
         target = c.qident("table")
-        if self._key(target) in self._foreign:
-            key = self._key(target)
-            kind, pinned = self._foreign_kind.get(key, ("delta", False))
-            if pinned:
-                raise ValueError(
-                    f"{target} is pinned to a time-travel snapshot and "
-                    "is read-only; attach the live table to COPY INTO"
-                )
-            schema = self._spark.table(self._mangled_view(key)).schema
-            out = self._copy_source(c, schema)
-            return self._foreign_append(key, kind, out, op="copy_into")
-        name, t = self._resolve(target)
-        schema = self._target_schema(t)
-        out = self._copy_source(c, schema)
-        version = t.append(out)
-        return self._result(name, "copy_into", version)
+        t, att = self._writable(target, "COPY INTO")
+        out = self._copy_source(c, self._write_schema(target, t))
+        if att is not None:
+            return self._foreign_append(target, att, out, "copy_into")
+        return self._result(target, "copy_into", t.append(out))
 
     def _copy_source(self, c: _Cursor, schema):
         """Parse ``FROM '<path>' [FILEFORMAT = ...]`` and return the
         source files schema-aligned to ``schema``."""
         c.expect("FROM")
-        src_tok = c.peek()
-        if src_tok is None or not src_tok.startswith("'"):
-            raise ValueError("COPY INTO expects FROM '<path>'")
-        c.i += 1
-        path = src_tok[1:-1].replace("''", "'")
+        path = c.string("COPY INTO expects FROM '<path>'")
         fmt = "parquet"
         if c.accept("FILEFORMAT"):
             c.expect("=")
@@ -1996,21 +1931,9 @@ class TxnSqlRouter:
             c.expect("INTO")
         c.accept("TABLE")
         target = c.qident("table")
-        if self._key(target) in self._foreign:
-            return self._exec_insert_foreign(
-                c, target, self._key(target), overwrite
-            )
-        name, t = self._resolve(target)
-        schema = self._target_schema(t)
-        cols: list[str] | None = None
-        if c.peek() == "(":
-            c.expect("(")
-            cols = []
-            while True:
-                cols.append(c.ident("insert column"))
-                if not c.accept(","):
-                    break
-            c.expect(")")
+        t, att = self._writable(target, "INSERT")
+        schema = self._write_schema(target, t)
+        cols = c.ident_list("insert column") if c.peek() == "(" else None
         rest = _render(c.toks[c.i:])
         if not rest:
             raise ValueError("INSERT needs a VALUES list or a query")
@@ -2034,364 +1957,11 @@ class TxnSqlRouter:
                 for f in schema.fields
             ]
         )
+        op = "overwrite" if overwrite else "append"
+        if att is not None:
+            return self._foreign_append(target, att, out, op)
         if overwrite:
             version = t.commit(out, operation="overwrite")
-            return self._result(name, "overwrite", version)
-        version = t.append(out)
-        return self._result(name, "append", version)
-
-    def _exec_insert_foreign(
-        self, c: _Cursor, target: str, key: str, overwrite: bool
-    ):
-        """``INSERT INTO`` / ``INSERT OVERWRITE`` a FOREIGN attachment
-        (rounds 14/16): the commit lands against the foreign table's
-        OWN log/metadata — ``append_delta``/``append_iceberg`` for
-        INTO, ``overwrite_delta``/``overwrite_iceberg`` for OVERWRITE
-        (one commit: every live file tombstoned + the new rows as
-        fresh adds; CDF readers synthesize delete/insert rows from the
-        protocol's dataChange rule) — and the session views refresh to
-        the new head.  Pinned (time-travel) attachments refuse."""
-        kind, pinned = self._foreign_kind.get(key, ("delta", False))
-        if pinned:
-            raise ValueError(
-                f"{target} is pinned to a time-travel snapshot and is "
-                "read-only; attach the live table to write"
-            )
-        cols: list[str] | None = None
-        if c.peek() == "(":
-            c.expect("(")
-            cols = []
-            while True:
-                cols.append(c.ident("insert column"))
-                if not c.accept(","):
-                    break
-            c.expect(")")
-        rest = _render(c.toks[c.i:])
-        if not rest:
-            raise ValueError("INSERT needs a VALUES list or a query")
-        df = self._spark.sql(rest)
-        schema = self._spark.table(self._mangled_view(key)).schema
-        names = cols if cols is not None else schema.fieldNames()
-        if len(df.columns) != len(names):
-            raise ValueError(
-                f"INSERT supplies {len(df.columns)} columns for "
-                f"{len(names)} target columns"
-            )
-        df = df.toDF(*names)
-        known = {f.name for f in schema.fields}
-        extra = [n for n in names if n not in known]
-        if extra:
-            raise ValueError(f"INSERT names unknown columns {extra}")
-        out = df.select(
-            [
-                (
-                    F.col(f.name) if f.name in df.columns else F.lit(None)
-                ).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
-        return self._foreign_append(
-            key,
-            kind,
-            out,
-            op="overwrite" if overwrite else "append",
-        )
-
-    def _foreign_append(self, key: str, kind: str, out, *, op: str):
-        """Commit ``out`` against a foreign attachment's own
-        log/metadata (``append_delta`` / ``append_iceberg``, or the
-        overwrite twins for ``op="overwrite"``) and refresh the
-        session views to the new head."""
-        path = self._foreign[key]
-        replaces = op in ("overwrite", "truncate")
-        if kind == "delta":
-            from .delta_export import append_delta, overwrite_delta
-
-            res = (overwrite_delta if replaces else append_delta)(
-                self._spark, path, out
-            )
-            ver = str(res["version"])
         else:
-            from .iceberg_export import (
-                append_iceberg,
-                overwrite_iceberg,
-            )
-
-            res = (overwrite_iceberg if replaces else append_iceberg)(
-                self._spark, path, out
-            )
-            ver = str(res["snapshot_id"])
-        self._refresh_foreign_views(key, kind)
-        return local_df(self._spark, 
-            [(f"{op}_foreign_{kind}", ver)],
-            "operation string, version string",
-        )
-
-    def _refresh_foreign_views(self, key: str, kind: str) -> None:
-        """Re-resolve a foreign attachment's session views to the
-        current head (the attached reader pinned its snapshot at load
-        time)."""
-        fmt = "delta_import" if kind == "delta" else "iceberg_import"
-        df2 = self._spark.read.format(fmt).load(self._foreign[key])
-        ns, bare = key.split(".", 1)
-        if ns == self._namespace:
-            df2.createOrReplaceTempView(bare)
-        df2.createOrReplaceTempView(self._mangled_view(key))
-
-    def _exec_optimize_foreign(self, c: _Cursor, target: str, key: str):
-        """``OPTIMIZE <foreign attachment>`` (round 16, r15 verdict
-        task 7): Delta attachments bin-pack compact through
-        ``optimize_delta`` (a pure ``dataChange=false`` commit —
-        streaming tails skip it); Iceberg attachments merge their data
-        manifests through ``rewrite_manifests_iceberg`` (an O(metadata)
-        ``replace`` snapshot — data bytes never move)."""
-        kind, pinned = self._foreign_kind.get(key, ("delta", False))
-        if pinned:
-            raise ValueError(
-                f"{target} is pinned to a time-travel snapshot and is "
-                "read-only; attach the live table to OPTIMIZE"
-            )
-        compact = bool(c.accept("COMPACT"))
-        zorder: list[str] | None = None
-        if c.accept("ZORDER"):
-            c.expect("BY")
-            c.expect("(")
-            zorder = []
-            while True:
-                zorder.append(c.ident("ZORDER column"))
-                if not c.accept(","):
-                    break
-            c.expect(")")
-        if not c.done():
-            raise ValueError(
-                "OPTIMIZE on a foreign attachment takes at most "
-                f"COMPACT or ZORDER BY (...) (got {c.peek()!r})"
-            )
-        if zorder is not None and kind != "delta":
-            raise ValueError(
-                "ZORDER BY is a Delta layout op; an Iceberg "
-                "attachment takes OPTIMIZE [COMPACT]"
-            )
-        if kind == "delta":
-            # Delta's OPTIMIZE already IS bin-pack compaction; the
-            # COMPACT word is accepted as a no-op synonym. ZORDER BY
-            # re-clusters every live file by the Morton interleave.
-            from .delta_export import optimize_delta
-
-            res = optimize_delta(
-                self._spark, self._foreign[key], zorder_by=zorder
-            )
-            op, ver, n = (
-                "optimize_foreign_delta",
-                str(res["version"]),
-                res["n_files_removed"],
-            )
-        elif compact:
-            # OPTIMIZE <iceberg attachment> COMPACT: bin-pack the
-            # undersized data files (delete-carrying files rewritten
-            # with their dead rows purged) in one replace snapshot
-            from .iceberg_export import compact_data_files_iceberg
-
-            res = compact_data_files_iceberg(
-                self._spark, self._foreign[key]
-            )
-            op, ver, n = (
-                "compact_foreign_iceberg",
-                str(res["snapshot_id"]),
-                res["n_rewritten"],
-            )
-        else:
-            from .iceberg_export import rewrite_manifests_iceberg
-
-            res = rewrite_manifests_iceberg(
-                self._spark, self._foreign[key]
-            )
-            op, ver, n = (
-                "optimize_foreign_iceberg",
-                str(res["snapshot_id"]),
-                res["n_manifests_before"],
-            )
-        self._refresh_foreign_views(key, kind)
-        return local_df(self._spark, 
-            [(op, ver, int(n))],
-            "operation string, version string, n_compacted bigint",
-        )
-
-    def _exec_vacuum_foreign(self, c: _Cursor, target: str, key: str):
-        """``VACUUM <foreign attachment> [RETAIN n HOURS]`` (round 16):
-        Delta attachments delete unreferenced data/DV files older than
-        the retention window (``vacuum_delta``); Iceberg attachments
-        expire snapshots older than the window and garbage-collect
-        files only they reference (``expire_snapshots_iceberg``)."""
-        kind, pinned = self._foreign_kind.get(key, ("delta", False))
-        if pinned:
-            raise ValueError(
-                f"{target} is pinned to a time-travel snapshot and is "
-                "read-only; attach the live table to VACUUM"
-            )
-        retain = None
-        if c.accept("RETAIN"):
-            retain = float(c.peek())
-            c.i += 1
-            c.expect("HOURS")
-        if not c.done():
-            raise ValueError(
-                f"unexpected VACUUM clause at {c.peek()!r}"
-            )
-        if kind == "delta":
-            from .delta_export import vacuum_delta
-
-            res = vacuum_delta(
-                self._spark, self._foreign[key], retain_hours=retain
-            )
-            op, n = "vacuum_foreign_delta", res["n_removed"]
-        else:
-            import time as _time
-
-            from .iceberg_export import expire_snapshots_iceberg
-
-            cutoff = (
-                int((_time.time() - retain * 3600.0) * 1000)
-                if retain is not None
-                else None
-            )
-            res = expire_snapshots_iceberg(
-                self._spark, self._foreign[key], older_than_ms=cutoff
-            )
-            op, n = "vacuum_foreign_iceberg", res["n_files_deleted"]
-        self._refresh_foreign_views(key, kind)
-        return local_df(self._spark, 
-            [(op, f"dropped={int(n)}")],
-            "operation string, version string",
-        )
-
-    def _exec_update_foreign(self, c: _Cursor, target: str, key: str):
-        """``UPDATE <foreign attachment> SET ... [WHERE ...]``
-        (round 16, r15 verdict task 5): a Delta attachment routes
-        through ``update_delta``, an Iceberg attachment through
-        ``update_iceberg`` — both in ``auto`` mode, preserving the
-        never-upgrade-protocol-from-SQL rule (a Delta table without
-        the DV feature takes copy-on-write; use the Python API's
-        ``mode='dv'`` to opt into an upgrade)."""
-        kind, pinned = self._foreign_kind.get(key, ("delta", False))
-        if pinned:
-            raise ValueError(
-                f"{target} is pinned to a time-travel snapshot and is "
-                "read-only; attach the live table to UPDATE"
-            )
-        alias = target.split(".")[-1]
-        if c.accept("AS"):
-            alias = c.ident("alias")
-        elif c.kw() != "SET":
-            alias = c.ident("alias")
-        c.expect("SET")
-        quals = {target, alias}
-        sets: dict[str, str] = {}
-        while True:
-            col = c.ident("SET column")
-            if c.accept("."):
-                if col.lower() not in {q.lower() for q in quals}:
-                    raise ValueError(
-                        f"SET qualifier {col!r} does not name the "
-                        "target table"
-                    )
-                col = c.ident("SET column")
-            c.expect("=")
-            sets[col] = _render(
-                _strip_qualifier(
-                    c.take_until((("WHERE",),), stop_comma=True), quals
-                )
-            )
-            if not c.accept(","):
-                break
-        where_sql = "true"
-        if c.accept("WHERE"):
-            where = _strip_qualifier(c.take_until(()), quals)
-            where_sql = _render(where)
-        if not c.done():
-            raise ValueError(
-                f"unexpected trailing tokens: "
-                f"{_render(c.toks[c.i:])!r}"
-            )
-        if kind == "delta":
-            from .delta_export import update_delta
-
-            res = update_delta(
-                self._spark, self._foreign[key], sets, where_sql
-            )
-            ver = str(res["version"])
-        else:
-            from .iceberg_export import update_iceberg
-
-            res = update_iceberg(
-                self._spark, self._foreign[key], sets, where_sql
-            )
-            ver = str(res["snapshot_id"])
-        self._refresh_foreign_views(key, kind)
-        return local_df(self._spark, 
-            [
-                (
-                    f"update_foreign_{res['mode']}",
-                    ver,
-                    int(res["n_matched"]),
-                )
-            ],
-            "operation string, version string, n_matched bigint",
-        )
-
-    def _exec_delete_foreign(self, c: _Cursor, target: str, key: str):
-        """``DELETE FROM <foreign attachment> [WHERE ...]`` (round 15,
-        r14 verdict task 7): a Delta attachment routes through
-        ``delete_delta`` in ``auto`` mode — a deletion-vector write
-        when the table's protocol already carries the feature, else
-        copy-on-write; the SQL surface never upgrades a foreign
-        protocol (use the Python API's ``mode='dv'`` for that).  An
-        Iceberg attachment routes through ``delete_iceberg`` — a spec
-        position-delete file on v2 tables, Puffin deletion vectors on
-        v3."""
-        kind, pinned = self._foreign_kind.get(key, ("delta", False))
-        if pinned:
-            raise ValueError(
-                f"{target} is pinned to a time-travel snapshot and is "
-                "read-only; attach the live table to DELETE"
-            )
-        alias = target.split(".")[-1]
-        if c.accept("AS"):
-            alias = c.ident("alias")
-        elif not c.done() and c.kw() != "WHERE":
-            alias = c.ident("alias")
-        quals = {target, alias}
-        where_sql = "true"
-        if c.accept("WHERE"):
-            where = _strip_qualifier(c.take_until(()), quals)
-            where_sql = _render(where)
-        if not c.done():
-            raise ValueError(
-                f"unexpected trailing tokens: "
-                f"{_render(c.toks[c.i:])!r}"
-            )
-        if kind == "delta":
-            from .delta_export import delete_delta
-
-            res = delete_delta(
-                self._spark, self._foreign[key], where_sql
-            )
-            ver = str(res["version"])
-        else:
-            from .iceberg_export import delete_iceberg
-
-            res = delete_iceberg(
-                self._spark, self._foreign[key], where_sql
-            )
-            ver = str(res["snapshot_id"])
-        self._refresh_foreign_views(key, kind)
-        return local_df(self._spark, 
-            [
-                (
-                    f"delete_foreign_{res['mode']}",
-                    ver,
-                    int(res["n_matched"]),
-                )
-            ],
-            "operation string, version string, n_matched bigint",
-        )
+            version = t.append(out)
+        return self._result(target, op, version)

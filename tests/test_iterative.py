@@ -70,6 +70,18 @@ def test_connected_components_raises_when_budget_too_small(spark):
         connected_components(edges, max_iter=2)
 
 
+def test_connected_components_rejects_non_integral_ids(spark):
+    """String node ids would sum to NULL in the convergence check and
+    stop after one round with wrong labels; they must raise instead."""
+    import pytest
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c")], "src string, dst string"
+    )
+    with pytest.raises(TypeError, match="integral node ids"):
+        connected_components(edges)
+
+
 def test_kmeans_assignments_match_returned_centroids(spark):
     """Every returned assignment must be to the NEAREST returned centroid —
     the final E-step keeps the (assignments, centroids) pair consistent."""

@@ -858,7 +858,12 @@ def test_foreign_attachment_copy_into_and_delete(spark, tmp_path):
 
 
 def test_foreign_attachment_update_pinned_refuses(spark, tmp_path):
+    """Every write verb refuses a time-travel-pinned attachment, Delta
+    (VERSION AS OF) and Iceberg (SNAPSHOT AS OF) alike, and the foreign
+    table is left untouched."""
     from rxlan_aws_lakehouse_spark.delta_export import export_delta
+    from rxlan_aws_lakehouse_spark.iceberg_export import export_iceberg
+    from rxlan_aws_lakehouse_spark.iceberg_import import load_table_metadata
     from rxlan_aws_lakehouse_spark.sql_dml import TxnSqlRouter
     from rxlan_aws_lakehouse_spark.txn import TxnTable
     import pytest as _pytest
@@ -871,16 +876,47 @@ def test_foreign_attachment_update_pinned_refuses(spark, tmp_path):
         spark.createDataFrame([(2, "b")], "k INT, seg STRING"),
         operation="append",
     )
-    ddest = str(tmp_path / "d")
+    ddest, idest = str(tmp_path / "d"), str(tmp_path / "i")
     export_delta(t, ddest)
+    export_iceberg(t, idest)
+    sid = load_table_metadata(idest)["current-snapshot-id"]
+    spark.createDataFrame(
+        [(3, "c")], "k INT, seg STRING"
+    ).write.parquet(str(tmp_path / "extra"))
+    spark.createDataFrame(
+        [(1, "z")], "k INT, seg STRING"
+    ).createOrReplaceTempView("pinned_ups")
     router = TxnSqlRouter(spark)
     router.sql(
         f"CREATE TABLE fdp USING DELTA_IMPORT LOCATION '{ddest}' "
         "VERSION AS OF 0"
     )
-    with _pytest.raises(ValueError, match="pinned"):
-        router.sql("UPDATE fdp SET k = 1 WHERE k = 1")
-    router.sql("DROP TABLE fdp")
+    router.sql(
+        f"CREATE TABLE fip USING ICEBERG_IMPORT LOCATION '{idest}' "
+        f"SNAPSHOT AS OF {sid}"
+    )
+    writes = (
+        "INSERT INTO {t} VALUES (9, 'z')",
+        "INSERT OVERWRITE {t} VALUES (9, 'z')",
+        "UPDATE {t} SET k = 1 WHERE k = 1",
+        "DELETE FROM {t} WHERE k = 1",
+        "MERGE INTO {t} t USING pinned_ups s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET *",
+        "OPTIMIZE {t}",
+        "VACUUM {t} RETAIN 0 HOURS",
+        "TRUNCATE TABLE {t}",
+        "RESTORE TABLE {t} TO VERSION AS OF 0",
+        "COPY INTO {t} FROM '" + str(tmp_path / "extra") + "'",
+    )
+    for name in ("fdp", "fip"):
+        for stmt in writes:
+            with _pytest.raises(ValueError, match="pinned"):
+                router.sql(stmt.format(t=name))
+        assert (
+            router.sql(f"SELECT count(*) AS n FROM {name}").collect()[0]["n"]
+            == 1
+        )
+        router.sql(f"DROP TABLE {name}")
 
 
 def test_foreign_attachment_merge(spark, tmp_path):

@@ -61,3 +61,17 @@ def test_worker_resolves_pyspark_from_site(tmp_path):
     )
     assert out.returncode == 0, out.stderr
     assert ".zip" not in out.stdout
+
+
+def test_unresolvable_pyspark_python_is_left_alone(monkeypatch):
+    """A caller-chosen PYSPARK_PYTHON that ``shutil.which`` cannot
+    resolve is never replaced by this interpreter behind the shim."""
+    from rxlan_aws_lakehouse_spark.session import _install_worker_shim
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_WORKER_SHIM", raising=False)
+    for var in ("SPARK_GRAFT_REAL_PYTHON", "SPARK_GRAFT_SITE_OK"):
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setenv("PYSPARK_PYTHON", "no-such-python-interpreter")
+    _install_worker_shim()
+    assert os.environ["PYSPARK_PYTHON"] == "no-such-python-interpreter"
+    assert "SPARK_GRAFT_REAL_PYTHON" not in os.environ
